@@ -152,18 +152,24 @@ object Bench {
         val account = pass == passes
         val before = if (account) shuffleSnapshot() else null
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+        val err = try { fn(spark, sfDir).count(); None }
+                  catch { case e: Throwable => Some(e) }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) {
-          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-          if (account) {
-            val after = shuffleSnapshot()
-            shuffleByKey(name) = (after._1 - before._1,
-              after._2 - before._2, after._3 - before._3)
-          }
+        // the failure line is printed after the clock stops, on stderr
+        // so the one-line JSON on stdout stays parseable
+        err match {
+          case Some(e) =>
+            System.err.println(
+              s"BENCHFAIL $name ${e.getClass.getName}: ${e.getMessage}")
+            failCount(name) = failCount.getOrElse(name, 0) + 1
+          case None =>
+            samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
+            if (account) {
+              val after = shuffleSnapshot()
+              shuffleByKey(name) = (after._1 - before._1,
+                after._2 - before._2, after._3 - before._3)
+            }
         }
-        else failCount(name) = failCount.getOrElse(name, 0) + 1
         // Round 18 block hygiene (guide §5): hand this key's scratch
         // localCheckpoint blocks to the BlockManager now — outside the
         // timed region, replacing the ContextCleaner's

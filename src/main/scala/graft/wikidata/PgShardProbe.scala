@@ -10,8 +10,8 @@ import graft.sources.{PgCopySink, PgDdl, PgServer}
   * when the target is hash-sharded across N tables on the same server.
   *
   * The probe drives EXACTLY the declared key's Spark side
-  * (Etl.loadFrame — bz2 ingest → flatten → typed extraction → label
-  * join) into PgCopySink with shards = N, and times the complete load
+  * (Etl.loadFrame — one bz2 dump scan → flatten carrying the en label
+  * → typed extraction) into PgCopySink with shards = N, and times the complete load
   * (staging COPYs + the one cross-shard promote transaction). The
   * Spark-side work is identical at every N, so statements/s vs N
   * isolates the writer ceiling from the protocol. Same single box —

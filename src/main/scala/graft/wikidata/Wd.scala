@@ -342,20 +342,25 @@ object Wd {
   /** Claims flatten core (unsorted): one row per statement mainsnak,
     * raw JSON payload preserved. Parameterized on the entity frame so
     * the standalone key and the composed ETL chain share one plan
-    * shape regardless of which source (plain or bz2 NDJSON) fed it. */
-  def claimsFlatten(ents: DataFrame): DataFrame =
+    * shape regardless of which source (plain or bz2 NDJSON) fed it.
+    * `passThrough` columns of the entity frame ride both explodes
+    * unchanged, right after `pid` (lets the composed ETL carry a
+    * per-entity value through its one dump scan instead of re-joining
+    * it on `id`); the default `Nil` leaves the plan untouched. */
+  def claimsFlatten(ents: DataFrame, passThrough: Seq[String] = Nil): DataFrame = {
+    val keep = passThrough.map(col)
     ents
-      .select(col("id"), explode(col("claims")).as(Seq("pid", "stmts")))
-      .select(col("id"), col("pid"), explode(col("stmts")).as("st"))
-      .select(
-        col("id"), col("pid"),
+      .select(col("id") +: keep :+ explode(col("claims")).as(Seq("pid", "stmts")): _*)
+      .select(col("id") +: keep :+ col("pid") :+ explode(col("stmts")).as("st"): _*)
+      .select((col("id") +: keep) ++ Seq(col("pid"),
         col("st.id").as("statement_id"),
         col("st.rank").as("rank"),
         col("st.mainsnak.snaktype").as("snaktype"),
         col("st.mainsnak.datavalue.type").as("dv_type"),
         col("st.mainsnak.datavalue.value").as("dv_raw"),
         coalesce(size(col("st.qualifiers")), lit(0)).as("n_qualifier_props"),
-        coalesce(size(col("st.references")), lit(0)).as("n_refs"))
+        coalesce(size(col("st.references")), lit(0)).as("n_refs")): _*)
+  }
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -127,27 +127,47 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("dynamicpruning"), p.take(3000))
   }
 
-  /** Every FileSourceScanExec in an EXECUTED plan. AQE hides
-    * materialized stages behind QueryStageExec leaves, so a plain
-    * children walk never reaches the scan — unwrap every wrapper kind.
-    * Shared by the runtime-metric tests (DPP numFiles, layout
-    * numOutputRows). */
-  private def allScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
+  /** Every node of an EXECUTED plan. AQE hides materialized stages
+    * behind QueryStageExec leaves, so a plain children walk never
+    * reaches the scan — unwrap every wrapper kind. */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val here = p match {
-      case s: FileSourceScanExec => Seq(s)
-      case _ => Seq.empty
-    }
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
       case r: ReusedExchangeExec => Seq(r.child)
       case other => other.children
     }
-    here ++ kids.flatMap(allScans) ++ p.subqueries.flatMap(allScans)
+    p +: (kids.flatMap(allNodes) ++ p.subqueries.flatMap(allNodes))
+  }
+
+  /** Every FileSourceScanExec in an EXECUTED plan. Shared by the
+    * runtime-metric tests (DPP numFiles, layout numOutputRows) and the
+    * ETL single-scan pins. */
+  private def allScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    allNodes(p).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+
+  test("dump ETLs read their dump in ONE scan: no re-scan, no join") {
+    // Etl.loadFrame carries the en label, Mediainfo.loadFrame the en
+    // caption, through the statements explode as a pass-through column
+    // of the parsed row. A second FileSourceScanExec (or any join node)
+    // means a side frame re-decompresses and re-parses the whole dump
+    // just to re-attach a per-entity value on id.
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    for ((name, df) <- Seq(
+        "Etl" -> graft.wikidata.Etl.loadFrame(spark),
+        "Mediainfo" -> graft.wikidata.Mediainfo.loadFrame(spark))) {
+      df.collect()
+      val executed = df.queryExecution.executedPlan
+      assert(allScans(executed).size === 1, s"$name: ${executed.treeString}")
+      assert(!allNodes(executed).exists(_.isInstanceOf[BaseJoinExec]),
+        s"$name: ${executed.treeString}")
+    }
   }
 
   test("join_dpp runtime metrics prove partitions were actually skipped") {

@@ -439,7 +439,7 @@ class StreamingSpec extends AnyFunSuite {
       .schema(graft.wikidata.EntitySchema.entity)
       .option("maxFilesPerTrigger", 1) // chunk = micro-batch
       .json(dir)
-      .transform(graft.wikidata.Wd.claimsFlatten)
+      .transform(graft.wikidata.Wd.claimsFlatten(_))
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("wd_stream_out").start()
     try {
